@@ -2593,11 +2593,17 @@ JOIN exact USING (vec_id)
 # cells from identical integer arithmetic. Probe = the IVF_NPROBE
 # cells closest to the query (qdot DESC, cell ASC), exact round-4
 # cosine re-rank on the float embeddings, k = 13 (app.py:409).
-# Scale shape: assignment is a scan-side projection of 16 integer
-# dots (one pass, no shuffle); the probe list is a 4-row broadcast;
-# candidates ~ nprobe/cells of the corpus. At 100 TB the pivots come
-# from MLlib KMeans (q49) and cells scale ~sqrt(N); THIS op pins them
-# so a second engine can grade candidate generation — same playbook
+# The Spark side runs the pinned pivots through the SAME kernels as
+# trained pivots (q369): a (cell, cent) relation, _assign_to_pivots'
+# argmin of |P|^2 - 2*code·P and _probe_rank's (L2 ASC, cell) order.
+# Every ±1 pivot has |P|^2 = EMB_DIM, so argmin-L2 IS argmax-dot with
+# the same first-index tie-break, and (L2 ASC, cell) IS (qdot DESC,
+# cell) — the oracle's dot formulation, computed exactly.
+# Scale shape: assignment is one Arrow pass over the codes against a
+# broadcast pivot row (no shuffle); the probe list is a 4-row
+# broadcast; candidates ~ nprobe/cells of the corpus. At 100 TB the
+# pivots come from MLlib KMeans (q49) and cells scale ~sqrt(N); THIS
+# op pins them so a second engine can grade candidate generation — same playbook
 # that took MinHash from rows-only (q44) to hash-graded (q302).
 # Measured (QUALITY.md): fixture recall@13 0.692 at 28% scan (sf0.01)
 # / 0.462 at 25% scan (sf0.1) — above the isotropic recall~scan bound
@@ -2629,88 +2635,106 @@ def _ivf_pivots_n(n_cells: int) -> list[list[int]]:
     return out
 
 
-def _ivf_pivots() -> list[list[int]]:
-    return _ivf_pivots_n(IVF_CELLS)
-
-
-def _ivf_dots(code_col):
-    """Array of IVF_CELLS int64 dot products code·pivot."""
-    pivots = _ivf_pivots()
-    return F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    code_col,
-                    F.array(*[F.lit(s).cast("bigint") for s in row]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            )
-            for row in pivots
-        ]
+def _pinned_pivots(
+    spark: SparkSession, n_cells: int = IVF_CELLS
+) -> DataFrame:
+    """(cell, cent array<bigint>): the first ``n_cells`` pinned pivots
+    as a relation — the shape trained_pivots returns, so pinned and
+    trained cells share one assigner and one probe."""
+    return spark.createDataFrame(
+        list(enumerate(_ivf_pivots_n(n_cells))),
+        "cell bigint, cent array<bigint>",
     )
 
 
-def _ivf_assign(emb: DataFrame) -> DataFrame:
-    """(vec_id, cell): argmax-dot cell with first-index tie-break.
-
-    Arrow/numpy twin of the declarative form (the dedup.py
-    _pmh_shingle_sigs PERF NOTE applied here, found by the r12
-    scaling probe): the 16 interpreted HOF dot chains cost ~10 s per
-    corpus pass; one int64 numpy matmul is ~20x faster and
-    BIT-IDENTICAL — pure integer arithmetic, and np.argmax returns
-    the FIRST max exactly like array_position(ds, array_max(ds)) in
-    both engines. The DuckDB oracle keeps the declarative form
-    (Q325_ASSIGN_CTES), so cross-engine equality still grades the
-    integer chain itself.
-    """
-    return _ivf_assign_n(emb, IVF_CELLS)
-
-
-def _ivf_assign_n(emb: DataFrame, n_cells: int) -> DataFrame:
-    """Generalized cell assignment over the first ``n_cells`` pivots
-    of the shared LCG stream (q366's cells ~ sqrt(N) scale path)."""
-    codes = _int8_codes(emb).select("vec_id", "code")
-    pivots = _ivf_pivots_n(n_cells)
+def _assign_to_pivots(codes: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cell): argmin-L2 cell of every code against a (cell,
+    cent) pivot relation, first cell on ties (np.argmin). The pivot
+    table collapses to one sorted array column, broadcast-crossJoined,
+    and one Arrow pass computes the int64 argmin of |P|^2 - 2*code·P
+    (|code|^2 is constant per row, so ties and order match full L2)."""
+    pv = cents.agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("cell", "cent"))),
+            lambda s: s["cent"],
+        ).alias("pv")
+    )
 
     def assign(batches):
         import numpy as np
         import pandas as pd
 
-        P = np.array(pivots, dtype=np.int64).T  # dim x cells
         for pdf in batches:
             if not len(pdf):
                 continue
+            P = np.array(
+                [list(r) for r in pdf["pv"].iloc[0]], dtype=np.int64
+            )
             C = np.array(pdf["code"].tolist(), dtype=np.int64)
-            cells = np.argmax(C @ P, axis=1).astype(np.int64)
+            d = (P * P).sum(axis=1)[None, :] - 2 * (C @ P.T)
             yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].astype("int64"), "cell": cells}
+                {
+                    "vec_id": pdf["vec_id"].astype("int64"),
+                    "cell": np.argmin(d, axis=1).astype(np.int64),
+                }
             )
 
-    return codes.mapInPandas(assign, "vec_id bigint, cell bigint")
+    return codes.crossJoin(F.broadcast(pv)).mapInPandas(
+        assign, "vec_id bigint, cell bigint"
+    )
 
 
-def q325_portable_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned = _ivf_assign(emb)
-    qdots = (
-        _int8_codes(emb.where(F.col("vec_id") == BINARY_Q_ID))
+def _probe_rank(qcode: DataFrame, cents: DataFrame) -> DataFrame:
+    """(cell, pr): every pivot cell ranked by int64 squared L2 to the
+    one-row query ``code``, ties to the lower cell. Callers keep
+    ``pr <= nprobe``."""
+    dist = F.aggregate(
+        F.zip_with(
+            F.col("code"), F.col("cent"), lambda a, b: (a - b) * (a - b)
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    w = Window.orderBy(F.col("dist").asc(), "cell")
+    return (
+        qcode.select("code")
+        .crossJoin(F.broadcast(cents))
         .select(
-            F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
+            F.col("cell").cast("bigint").alias("cell"), dist.alias("dist")
         )
+        .withColumn("pr", F.row_number().over(w))
+        .select("cell", "pr")
     )
-    w = Window.orderBy(F.col("qdot").desc(), "cell")
+
+
+def _ivf_candidates(codes: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id): every corpus vector but BINARY_Q_ID whose cell is one
+    of the query's IVF_NPROBE probed cells."""
     probed = (
-        qdots.withColumn("pr", F.row_number().over(w))
+        _probe_rank(codes.where(F.col("vec_id") == BINARY_Q_ID), cents)
         .where(F.col("pr") <= IVF_NPROBE)
-        .select(F.col("cell").cast("bigint").alias("cell"))
+        .select("cell")
     )
-    cand = (
-        assigned.where(F.col("vec_id") != BINARY_Q_ID)
+    return (
+        _assign_to_pivots(codes, cents)
+        .where(F.col("vec_id") != BINARY_Q_ID)
         .join(F.broadcast(probed), "cell")
         .select("vec_id")
     )
+
+
+def _ivf_assign(emb: DataFrame, n_cells: int = IVF_CELLS) -> DataFrame:
+    """(vec_id, cell) over the first ``n_cells`` pinned pivots. The
+    DuckDB oracle keeps the declarative dot form (Q325_ASSIGN_CTES),
+    so cross-engine equality still grades the integer chain itself."""
+    codes = _int8_codes(emb).select("vec_id", "code")
+    return _assign_to_pivots(codes, _pinned_pivots(emb.sparkSession, n_cells))
+
+
+def _ivf_ann(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """Top-K of BINARY_Q_ID over its probed cells, exact round-4
+    cosine re-rank — q325 (pinned cents) and q369 (trained cents)."""
+    cand = _ivf_candidates(_int8_codes(emb).select("vec_id", "code"), cents)
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
@@ -2732,6 +2756,11 @@ def q325_portable_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q325_portable_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _ivf_ann(emb, _pinned_pivots(spark))
+
+
 def _duck_ivf_dots_n(n_cells: int) -> str:
     """DuckDB list of the n_cells integer dot products."""
     parts = []
@@ -2744,17 +2773,12 @@ def _duck_ivf_dots_n(n_cells: int) -> str:
     return "[" + ", ".join(parts) + "]"
 
 
-def _duck_ivf_dots() -> str:
-    """DuckDB list of the IVF_CELLS integer dot products."""
-    return _duck_ivf_dots_n(IVF_CELLS)
-
-
 Q325_ASSIGN_CTES = f"""
 codes AS (
   SELECT vec_id, {_DUCK_I8.format(e='embeddings')} AS code FROM embeddings
 ),
 dots AS (
-  SELECT vec_id, {_duck_ivf_dots()} AS ds FROM codes
+  SELECT vec_id, {_duck_ivf_dots_n(IVF_CELLS)} AS ds FROM codes
 ),
 assigned AS (
   SELECT vec_id, CAST(list_position(ds, list_max(ds)) - 1 AS BIGINT) AS cell
@@ -3166,7 +3190,7 @@ ORDER BY tau
 # (a fixture proxy — labels don't exist on an uncurated crawl and can
 # skew arbitrarily); this op runs the identical curve inside PORTABLE
 # IVF CELLS, the actual SemDeDup recipe (Abbas et al. 2023: cluster
-# with k-means, dedup within clusters). Cells come from _ivf_assign_n
+# with k-means, dedup within clusters). Cells come from _ivf_assign
 # — pinned ±1 pivots over the int8 codes, one shared LCG stream,
 # bit-identical across engines — so the production blocking structure
 # itself is hash-graded.
@@ -3222,19 +3246,12 @@ def _semdedup_tau_curve(
     pivots: DataFrame | None = None,
 ) -> DataFrame:
     """One rung of the SemDeDup curve: within-cell pair scan at
-    ``n_cells`` pinned pivots, swept over SEMDEDUP_TAUS. Shared by
-    q346 (rung ladder) and q366 (fixed scaled rung). ``pivots`` (r15):
-    an optional (cell, cent) BROADCAST RELATION — e.g. trained_pivots'
-    seeded-Lloyd's table — replacing the pinned plan-literal pivots so
-    the SemDeDup cells adapt to the corpus; with the default None the
-    graded q346/q366 outputs are byte-identical to before."""
-    # localCheckpoint the cell assignment ONCE: it feeds the guard,
-    # BOTH pair-join sides and n_docs — without it the numpy code
-    # scan recomputes 4x (measured 22.8 s at sf0.1 in BENCH_r12's
-    # first record; ~4x cheaper materialized).
-    if pivots is None:
-        cells = _ivf_assign_n(emb, n_cells)
-    else:
+    ``n_cells`` cells, swept over SEMDEDUP_TAUS. Shared by q346 (rung
+    ladder) and q366 (fixed scaled rung). ``pivots``: an optional
+    (cell, cent) relation — e.g. trained_pivots' seeded-Lloyd's table
+    — in place of the first ``n_cells`` pinned pivots, so the
+    SemDeDup cells adapt to the corpus."""
+    if pivots is not None:
         # the pivot relation defines the cell count — refuse a caller
         # who believes a different n_cells is in force (the guard name
         # and pair-mass reasoning would silently describe the wrong
@@ -3245,9 +3262,15 @@ def _semdedup_tau_curve(
                 f"{name}: pivots relation has {n_pivots} cells but "
                 f"n_cells={n_cells} was requested"
             )
-        cells = _assign_to_pivots(
-            _int8_codes(emb).select("vec_id", "code"), pivots
-        )
+    else:
+        pivots = _pinned_pivots(spark, n_cells)
+    cells = _assign_to_pivots(
+        _int8_codes(emb).select("vec_id", "code"), pivots
+    )
+    # localCheckpoint the cell assignment ONCE: it feeds the guard,
+    # BOTH pair-join sides and n_docs — without it the numpy code
+    # scan recomputes 4x (measured 22.8 s at sf0.1 in BENCH_r12's
+    # first record; ~4x cheaper materialized).
     assigned = emb.join(cells, "vec_id").localCheckpoint()
     withcell = _guard_blocks(assigned, "cell", name, SEMDEDUP_CELL_CAP)
 
@@ -3860,14 +3883,10 @@ IVF_NPROBE_SWEEP = [1, 2, 4, 8, IVF_CELLS]
 
 def q349_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned = _ivf_assign(emb)
-    qdots = _int8_codes(emb.where(F.col("vec_id") == BINARY_Q_ID)).select(
-        F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
-    )
-    wp = Window.orderBy(F.col("qdot").desc(), "cell")
-    prank = qdots.withColumn("pr", F.row_number().over(wp)).select(
-        F.col("cell").cast("bigint").alias("cell"), "pr"
-    )
+    codes = _int8_codes(emb).select("vec_id", "code")
+    cents = _pinned_pivots(spark)
+    assigned = _assign_to_pivots(codes, cents)
+    prank = _probe_rank(codes.where(F.col("vec_id") == BINARY_Q_ID), cents)
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
@@ -4376,20 +4395,8 @@ def q360_ann_ensemble_recall(
         .dropDuplicates(["vec_id"])
     )
     # IVF candidates (q325's generator)
-    assigned = _ivf_assign(emb)
-    qdots = _int8_codes(emb.where(F.col("vec_id") == BINARY_Q_ID)).select(
-        F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
-    )
-    wp = Window.orderBy(F.col("qdot").desc(), "cell")
-    probed = (
-        qdots.withColumn("pr", F.row_number().over(wp))
-        .where(F.col("pr") <= IVF_NPROBE)
-        .select(F.col("cell").cast("bigint").alias("cell"))
-    )
-    cand_i = (
-        assigned.where(F.col("vec_id") != BINARY_Q_ID)
-        .join(F.broadcast(probed), "cell")
-        .select("vec_id")
+    cand_i = _ivf_candidates(
+        _int8_codes(emb).select("vec_id", "code"), _pinned_pivots(spark)
     )
     union = cand_h.unionByName(cand_i).dropDuplicates(["vec_id"])
     n_h = cand_h.agg(F.count(F.lit(1)).cast("bigint").alias("n_hyperplane"))
@@ -4466,7 +4473,7 @@ cand_h AS (
   WHERE c.vec_id != {BINARY_Q_ID}
 ),
 dots AS (
-  SELECT vec_id, {_duck_ivf_dots()} AS ds FROM codes
+  SELECT vec_id, {_duck_ivf_dots_n(IVF_CELLS)} AS ds FROM codes
 ),
 assigned AS (
   SELECT vec_id, CAST(list_position(ds, list_max(ds)) - 1 AS BIGINT) AS cell
@@ -4651,58 +4658,18 @@ def _pq_qtable(codes: DataFrame) -> DataFrame:
 
 def q362_portable_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _ivfpq_ann(spark, emb)
+    return _ivfpq_ann(emb, _pinned_pivots(spark))
 
 
-def _ivfpq_ann(
-    spark: SparkSession, emb: DataFrame, pivots: DataFrame | None = None
-) -> DataFrame:
-    """The q362 IVF-PQ pipeline with a swappable COARSE quantizer
-    (r15, VERDICT r14 item 5's last surface): ``pivots=None`` keeps
-    q362's pinned ±1 cells (argmax int dot — the graded default,
-    byte-identical); a (cell, cent) broadcast relation — e.g.
-    ``trained_pivots``' seeded-Lloyd's table — swaps in trained cells
-    via the q369 conventions (argmin int64 L2 assign AND probe). The
-    PQ encode / ADC / shortlist / exact re-rank stages are shared
-    verbatim, so at 100 TB the trained coarse stage and the trained
-    per-block codebooks (q175) broadcast through the SAME plan."""
+def _ivfpq_ann(emb: DataFrame, pivots: DataFrame) -> DataFrame:
+    """The q362 IVF-PQ pipeline over a swappable COARSE quantizer:
+    ``pivots`` is a (cell, cent) relation — _pinned_pivots for the
+    graded q362, or e.g. trained_pivots' seeded-Lloyd's table. The PQ
+    encode / ADC / shortlist / exact re-rank stages are shared, so at
+    100 TB the trained coarse stage and the trained per-block
+    codebooks (q175) broadcast through the SAME plan."""
     codes = _int8_codes(emb).select("vec_id", "code")
-    if pivots is None:
-        # coarse stage: q325's pinned IVF cells + nprobe probe list
-        assigned = _ivf_assign(emb)
-        qdots = codes.where(F.col("vec_id") == BINARY_Q_ID).select(
-            F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
-        )
-        w = Window.orderBy(F.col("qdot").desc(), "cell")
-        probed = (
-            qdots.withColumn("pr", F.row_number().over(w))
-            .where(F.col("pr") <= IVF_NPROBE)
-            .select(F.col("cell").cast("bigint").alias("cell"))
-        )
-    else:
-        # coarse stage: trained cells — q369's assign/probe verbatim
-        assigned = _assign_to_pivots(codes, pivots)
-        dist = F.aggregate(
-            F.zip_with(
-                F.col("code"), F.col("cent"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        w = Window.orderBy(F.col("dist").asc(), "cell")
-        probed = (
-            codes.where(F.col("vec_id") == BINARY_Q_ID)
-            .crossJoin(F.broadcast(pivots))
-            .select("cell", dist.alias("dist"))
-            .withColumn("pr", F.row_number().over(w))
-            .where(F.col("pr") <= IVF_NPROBE)
-            .select(F.col("cell").cast("bigint").alias("cell"))
-        )
-    cand = (
-        assigned.where(F.col("vec_id") != BINARY_Q_ID)
-        .join(F.broadcast(probed), "cell")
-        .select("vec_id")
-    )
+    cand = _ivf_candidates(codes, pivots)
     # PQ stage: encode candidates, ADC-score against the broadcast
     # one-row query table, shortlist by integer distance
     pq = _pq_encode(codes.join(cand, "vec_id"))
@@ -4836,22 +4803,9 @@ SELECT vec_id, cos_sim, rn FROM ann WHERE rn <= {K} ORDER BY rn
 def q363_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ann = q362_portable_ivfpq_ann(spark, sf_dir).select("vec_id")
-    assigned = _ivf_assign(emb)
-    codes = _int8_codes(emb).select("vec_id", "code")
-    qdots = codes.where(F.col("vec_id") == BINARY_Q_ID).select(
-        F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
-    )
-    w = Window.orderBy(F.col("qdot").desc(), "cell")
-    probed = (
-        qdots.withColumn("pr", F.row_number().over(w))
-        .where(F.col("pr") <= IVF_NPROBE)
-        .select(F.col("cell").cast("bigint").alias("cell"))
-    )
-    n_cand = (
-        assigned.where(F.col("vec_id") != BINARY_Q_ID)
-        .join(F.broadcast(probed), "cell")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
-    )
+    n_cand = _ivf_candidates(
+        _int8_codes(emb).select("vec_id", "code"), _pinned_pivots(spark)
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
     n_corpus = emb.where(F.col("vec_id") != BINARY_Q_ID).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_corpus")
     )
@@ -4941,21 +4895,7 @@ PQ_SHORTLIST_SWEEP = [2, 4, 8, 12, 20]  # multiples of K
 def q364_pq_shortlist_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     codes = _int8_codes(emb).select("vec_id", "code")
-    assigned = _ivf_assign(emb)
-    qdots = codes.where(F.col("vec_id") == BINARY_Q_ID).select(
-        F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
-    )
-    w = Window.orderBy(F.col("qdot").desc(), "cell")
-    probed = (
-        qdots.withColumn("pr", F.row_number().over(w))
-        .where(F.col("pr") <= IVF_NPROBE)
-        .select(F.col("cell").cast("bigint").alias("cell"))
-    )
-    cand = (
-        assigned.where(F.col("vec_id") != BINARY_Q_ID)
-        .join(F.broadcast(probed), "cell")
-        .select("vec_id")
-    )
+    cand = _ivf_candidates(codes, _pinned_pivots(spark))
     pq = _pq_encode(codes.join(cand, "vec_id"))
     qt = _pq_qtable(codes.where(F.col("vec_id") == BINARY_Q_ID))
     adc_col = None
@@ -5265,11 +5205,11 @@ ORDER BY tau
 # input is a fixed-size sample (q330's reservoir discipline) so this
 # stays one bounded task, while everything downstream — the corpus
 # cell assignment, probe, re-rank — is distributed and identical in
-# shape to the graded q325 plan. The learned pivot table then feeds
-# the SAME plan shapes as a 16-row BROADCAST RELATION instead of plan
-# literals: _assign_to_pivots is one Arrow pass (the q362 1-row-
-# broadcast-table pattern), and _semdedup_tau_curve accepts the same
-# relation (pivots=) so the q346/q366 SemDeDup path trains too.
+# shape to the graded q325 plan. The learned pivot table is a 16-row
+# (cell, cent) relation like _pinned_pivots', so it runs through the
+# SAME kernels (_assign_to_pivots, _probe_rank, _ivf_ann); _ivfpq_ann
+# and _semdedup_tau_curve take it too (pivots=), so the IVF-PQ coarse
+# stage and the q346/q366 SemDeDup cells train as well.
 # q370 grades the recall cross-engine — the DuckDB oracle re-derives
 # the pivots through LLOYD_ITERS unrolled CTE rounds of the same
 # integer arithmetic, so the trained-index recall is a hash-verified
@@ -5315,90 +5255,9 @@ def trained_pivots(
     )
 
 
-def _assign_to_pivots(codes: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell): argmin-L2 assignment of every code to a PIVOT
-    RELATION — the broadcast-table analog of _ivf_assign_n's plan-
-    literal pivots (q362's 1-row broadcast pattern: the 16-row pivot
-    table collapses to one sorted array column, crossJoin-broadcast,
-    one Arrow pass computes the int64 argmin)."""
-    pv = cents.agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("cell", "cent"))),
-            lambda s: s["cent"],
-        ).alias("pv")
-    )
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            P = np.array(
-                [list(r) for r in pdf["pv"].iloc[0]], dtype=np.int64
-            )
-            C = np.array(pdf["code"].tolist(), dtype=np.int64)
-            d = (P * P).sum(axis=1)[None, :] - 2 * (C @ P.T)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cell": np.argmin(d, axis=1).astype(np.int64),
-                }
-            )
-
-    return codes.crossJoin(F.broadcast(pv)).mapInPandas(
-        assign, "vec_id bigint, cell bigint"
-    )
-
-
 def q369_trained_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    codes = _int8_codes(emb).select("vec_id", "code")
-    cents = trained_pivots(emb).localCheckpoint()
-    assigned = _assign_to_pivots(codes, cents)
-    # probe list: the NPROBE trained cells nearest the query code —
-    # full int64 squared L2 this time (16 rows, declarative)
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("code"), F.col("cent"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.orderBy(F.col("dist").asc(), "cell")
-    probed = (
-        codes.where(F.col("vec_id") == BINARY_Q_ID)
-        .crossJoin(F.broadcast(cents))
-        .select("cell", dist.alias("dist"))
-        .withColumn("pr", F.row_number().over(w))
-        .where(F.col("pr") <= IVF_NPROBE)
-        .select(F.col("cell").cast("bigint").alias("cell"))
-    )
-    cand = (
-        assigned.where(F.col("vec_id") != BINARY_Q_ID)
-        .join(F.broadcast(probed), "cell")
-        .select("vec_id")
-    )
-    qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
-        F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        cand.join(emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    wr = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(wr).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return _ivf_ann(emb, trained_pivots(emb).localCheckpoint())
 
 
 def q370_trained_ivf_recall_eval(

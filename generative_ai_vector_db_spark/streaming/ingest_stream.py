@@ -559,22 +559,19 @@ def query_vector_index(
         PPQ_M,
         PPQ_SHORTLIST,
         _int8_codes,
-        _ivf_dots,
+        _pinned_pivots,
         _pq_qtable,
+        _probe_rank,
     )
 
     codes_path, emb_path = _vector_index_paths(index_path)
     idx = spark.read.parquet(codes_path)
     store_emb = spark.read.parquet(emb_path).dropDuplicates(["vec_id"])
     qc = _int8_codes(q_emb).select("vec_id", "code")
-    qdots = qc.select(
-        F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
-    )
-    w = Window.orderBy(F.col("qdot").desc(), "cell")
     probed = (
-        qdots.withColumn("pr", F.row_number().over(w))
+        _probe_rank(qc, _pinned_pivots(spark))
         .where(F.col("pr") <= IVF_NPROBE)
-        .select(F.col("cell").cast("bigint").alias("cell"))
+        .select("cell")
     )
     qt = _pq_qtable(qc)
     adc_col = None

@@ -90,13 +90,32 @@ SLOW_TESTS = {
 }
 
 
+def _named_node_ids(config) -> set[tuple[str, str]]:
+    """(absolute file, test part) of every ``file::test`` argument."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            full = os.path.join(str(config.invocation_params.dir), path)
+            named.add((os.path.abspath(full), rest))
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
     import pytest as _pytest
 
+    # a slow test named by node id runs: the `-m "not slow"` default
+    # only trims directory- and file-level runs
+    named = _named_node_ids(config)
     for item in items:
         base = item.name.split("[")[0]
-        if base in SLOW_TESTS:
-            item.add_marker(_pytest.mark.slow)
+        if base not in SLOW_TESTS:
+            continue
+        rest = item.nodeid.split("::", 1)[1]
+        path = str(item.path)
+        if (path, rest) in named or (path, rest.split("[")[0]) in named:
+            continue
+        item.add_marker(_pytest.mark.slow)
 
 
 @pytest.fixture(scope="session")

@@ -352,23 +352,46 @@ def test_q288_oversize_source_samples_instead_of_erroring(spark):
 # --------------------------------------------------------------------------
 # q325 portable IVF ANN / q326 recall eval
 # --------------------------------------------------------------------------
-def _numpy_cells(X: np.ndarray) -> np.ndarray:
-    """Independent recomputation of the argmax-dot cell assignment."""
+def _numpy_dots(X: np.ndarray, n_cells: int = vector.IVF_CELLS) -> np.ndarray:
+    """Independent recomputation of the int8-code · pinned-pivot dots."""
     mx = np.abs(X).max(axis=1, keepdims=True)
     safe = np.where(mx == 0, 1.0, mx)
     C = np.where(mx == 0, 0.0, np.floor(X * 127.0 / safe + 0.5))
-    P = np.array(vector._ivf_pivots())
-    dots = C @ P.T
-    return dots.argmax(axis=1)  # numpy argmax = first max, same tie-break
+    return C @ np.array(vector._ivf_pivots_n(n_cells)).T
 
 
-def test_q325_cells_match_numpy_reference(spark, sf_dir_t2):
+def _numpy_cells(X: np.ndarray, n_cells: int = vector.IVF_CELLS) -> np.ndarray:
+    """Independent recomputation of the argmax-dot cell assignment."""
+    # numpy argmax = first max, same tie-break
+    return _numpy_dots(X, n_cells).argmax(axis=1)
+
+
+def _numpy_probe_order(dots: np.ndarray) -> list[int]:
+    return sorted(range(len(dots)), key=lambda c: (-dots[c], c))
+
+
+def _spark_probe_order(spark, emb, q_id: int, n_cells: int) -> list[int]:
+    qc = vector._int8_codes(emb.where(F.col("vec_id") == q_id))
+    rows = vector._probe_rank(
+        qc, vector._pinned_pivots(spark, n_cells)
+    ).collect()
+    return [r["cell"] for r in sorted(rows, key=lambda r: r["pr"])]
+
+
+@pytest.mark.parametrize(
+    "n_cells", [vector.IVF_CELLS, vector.SEMDEDUP_MAXC], ids=str
+)
+def test_q325_cells_match_numpy_reference(spark, sf_dir_t2, n_cells):
+    """The pinned pivots run through the trained-pivot kernels
+    (argmin-L2 assign, (L2 ASC, cell) probe); with every |P|^2 equal
+    they must reproduce argmax-dot cells and (dot DESC, cell) probe
+    order exactly."""
     emb = (
         spark.read.parquet(os.path.join(sf_dir_t2, "embeddings.parquet"))
         .select("vec_id", "embedding")
     )
     got = (
-        vector._ivf_assign(emb)
+        vector._ivf_assign(emb, n_cells)
         .toPandas()
         .sort_values("vec_id")
         .reset_index(drop=True)
@@ -379,9 +402,48 @@ def test_q325_cells_match_numpy_reference(spark, sf_dir_t2):
         .reset_index(drop=True)
     )
     X = np.stack(pdf["embedding"].to_numpy()).astype(float)
-    assert (got["cell"].to_numpy() == _numpy_cells(X)).all()
+    assert (got["cell"].to_numpy() == _numpy_cells(X, n_cells)).all()
     # cells are actually load-balancing (no degenerate single cell)
-    assert got["cell"].nunique() > vector.IVF_CELLS // 2
+    assert got["cell"].nunique() > n_cells // 2
+    dots = _numpy_dots(X, n_cells)
+    ids = pdf["vec_id"].to_numpy()
+    for qi in (0, 1, 7, len(ids) // 2, len(ids) - 1):
+        q_id = int(ids[qi])
+        assert _spark_probe_order(
+            spark, emb, q_id, n_cells
+        ) == _numpy_probe_order(dots[qi]), q_id
+
+
+def test_ivf_kernels_break_ties_to_first_cell(spark):
+    """Tie inputs: an all-zero embedding (every dot is 0) and two
+    vectors whose best dot is attained by two cells. Assignment and
+    probe order must follow numpy's first-index argmax / lower-cell
+    order."""
+    P = np.array(vector._ivf_pivots_n(vector.IVF_CELLS), dtype=float)
+
+    def tied(a: int, b: int) -> np.ndarray:
+        # ±1 where pivots a and b agree, 0 elsewhere: both dots equal
+        # the agreement count, which no other pivot can exceed
+        return np.where(P[a] == P[b], P[a], 0.0)
+
+    X = np.stack([np.zeros(vector.EMB_DIM), tied(3, 7), tied(5, 11)])
+    dots = _numpy_dots(X)
+    # the inputs really tie on their best cells
+    for row in dots:
+        assert (row == row.max()).sum() >= 2
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(len(X))],
+        "vec_id bigint, embedding array<float>",
+    )
+    got = {r["vec_id"]: r["cell"] for r in vector._ivf_assign(emb).collect()}
+    assert got == {i: int(c) for i, c in enumerate(dots.argmax(axis=1))}
+    assert got[0] == 0
+    orders = [
+        _spark_probe_order(spark, emb, i, vector.IVF_CELLS)
+        for i in range(len(X))
+    ]
+    assert orders == [_numpy_probe_order(row) for row in dots]
+    assert orders[0][: vector.IVF_NPROBE] == [0, 1, 2, 3]
 
 
 def test_q325_planted_recall(spark):
@@ -405,12 +467,9 @@ def test_q325_planted_recall(spark):
         assert recall >= 12 / 13, recall
         cells = _numpy_cells(X)
         qc = cells[0]
-        dots = np.floor(
-            X * 127.0 / np.abs(X).max(axis=1, keepdims=True) + 0.5
-        ) @ np.array(vector._ivf_pivots()).T
-        probe_order = sorted(
-            range(vector.IVF_CELLS), key=lambda c: (-dots[0][c], c)
-        )[: vector.IVF_NPROBE]
+        probe_order = _numpy_probe_order(_numpy_dots(X)[0])[
+            : vector.IVF_NPROBE
+        ]
         assert qc in probe_order
         scanned = np.isin(cells[1:], probe_order).mean()
         assert scanned < 0.6
@@ -436,13 +495,7 @@ def test_q326_recall_matches_independent_overlap(spark, sf_dir_t2):
     )[: vector.K]
     exact = set(ids[order])
     cells = _numpy_cells(X)
-    mx = np.abs(X).max(axis=1, keepdims=True)
-    dots = np.floor(X * 127.0 / np.where(mx == 0, 1, mx) + 0.5) @ np.array(
-        vector._ivf_pivots()
-    ).T
-    probe_order = sorted(
-        range(vector.IVF_CELLS), key=lambda c: (-dots[qi][c], c)
-    )[: vector.IVF_NPROBE]
+    probe_order = _numpy_probe_order(_numpy_dots(X)[qi])[: vector.IVF_NPROBE]
     cand_idx = [
         i
         for i in range(len(ids))

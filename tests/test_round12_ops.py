@@ -102,7 +102,7 @@ def test_q346_reference(spark, sf_dir_t2):
     for rung in rungs:
         cells = {
             r.vec_id: r.cell
-            for r in vector._ivf_assign_n(
+            for r in vector._ivf_assign(
                 load(spark, sf_dir_t2, "embeddings").select(
                     "vec_id", "embedding"
                 ),

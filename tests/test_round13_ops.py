@@ -186,7 +186,7 @@ def test_q366_scaled_cells_shrink_blocks(spark, sf_dir_t2):
 
 
 def test_scaled_assign_extends_pivot_stream():
-    p16 = vector._ivf_pivots()
+    p16 = vector._ivf_pivots_n(vector.IVF_CELLS)
     p64 = vector._ivf_pivots_n(vector.SEMDEDUP_SCALED)
     assert p64[: len(p16)] == p16
     assert len(p64) == vector.SEMDEDUP_SCALED

@@ -561,9 +561,9 @@ def test_trained_coarse_ivfpq_beats_data_blind_on_planted(
         "vec_id", "embedding"
     )
     cents = vector.trained_pivots(emb).localCheckpoint()
-    trained = vector._ivfpq_ann(spark, emb, pivots=cents).collect()
+    trained = vector._ivfpq_ann(emb, pivots=cents).collect()
     assert [r["rn"] for r in trained] == list(range(1, vector.K + 1))
-    blind = vector._ivfpq_ann(spark, emb).collect()
+    blind = vector._ivfpq_ann(emb, vector._pinned_pivots(spark)).collect()
 
     qv = emb.where(F.col("vec_id") == vector.BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")

@@ -249,7 +249,7 @@ def test_q350_grouped_importance_equals_pertoken_reference(spark, sf_dir):
 def _semdedup_selfjoin_reference(spark, emb, n_cells, name):
     from generative_ai_vector_db_spark.functions import vectors as V
 
-    cells = vector._ivf_assign_n(emb, n_cells)
+    cells = vector._ivf_assign(emb, n_cells)
     assigned = emb.join(cells, "vec_id").localCheckpoint()
     withcell = vector._guard_blocks(
         assigned, "cell", name, vector.SEMDEDUP_CELL_CAP
