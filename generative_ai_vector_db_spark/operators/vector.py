@@ -1899,6 +1899,41 @@ SELECT vec_id, hamming, rn FROM ranked WHERE rn <= {K} ORDER BY rn
 """
 
 
+def _cosine_topk(rows: DataFrame, qv: DataFrame) -> DataFrame:
+    """(vec_id, cos_sim, rn bigint): the K ``rows`` (vec_id, embedding)
+    nearest the one-row ``qv`` (q_emb), ranked by the q26 key
+    (round(cosine, 4) DESC, vec_id). The exact re-rank of every
+    single-query ANN face, and the exact side of every recall@k eval
+    (``rows`` = the corpus minus the query)."""
+    w = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
+    return (
+        rows.crossJoin(F.broadcast(qv))
+        .select(
+            "vec_id",
+            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
+                "cos_sim"
+            ),
+        )
+        .withColumn("rn", F.row_number().over(w).cast("bigint"))
+        .where(F.col("rn") <= K)
+        .orderBy("rn")
+    )
+
+
+def _recall_at_k(ann: DataFrame, exact: DataFrame) -> DataFrame:
+    """(k, n_common, recall): overlap of two top-K vec_id frames. A
+    global aggregate, so an empty overlap still yields one row."""
+    return (
+        ann.select("vec_id")
+        .join(exact.select("vec_id"), "vec_id")
+        .agg(
+            F.lit(K).cast("bigint").alias("k"),
+            F.count(F.lit(1)).cast("bigint").alias("n_common"),
+            (F.count(F.lit(1)) / F.lit(float(K))).alias("recall"),
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
 # q285 — binary-retrieval recall eval: overlap of q284's Hamming
 # top-k with the exact-cosine top-k for the same query — the
@@ -1913,34 +1948,12 @@ SELECT vec_id, hamming, rn FROM ranked WHERE rn <= {K} ORDER BY rn
 # ---------------------------------------------------------------------------
 def q285_binary_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ham = q284_binary_hamming_topk(spark, sf_dir).select("vec_id")
+    ham = q284_binary_hamming_topk(spark, sf_dir)
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    cos = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    exact = (
-        cos.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
-    overlap = ham.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_common")
-    )
-    return overlap.select(
-        F.lit(K).cast("bigint").alias("k"),
-        "n_common",
-        (F.col("n_common") / F.lit(float(K))).alias("recall"),
-    )
+    exact = _cosine_topk(emb.where(F.col("vec_id") != BINARY_Q_ID), qv)
+    return _recall_at_k(ham, exact)
 
 
 _DUCK_QDOT = (
@@ -2411,34 +2424,28 @@ def _hyperplane_buckets(emb: DataFrame) -> DataFrame:
     )
 
 
-def q320_portable_hyperplane_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # localCheckpoint: the bucket projection (2 tables x 8 plane dots
-    # over the int8 codes) feeds BOTH the probe side and
-    # the candidate side — materialized once instead of twice (the
-    # q346 r12 lesson applied here; output unchanged, lineage only)
-    bucketed = _hyperplane_buckets(emb).localCheckpoint()
-    # The probe side renames `tbl` -> `p_tbl` so the candidate join
-    # carries no duplicated column name: the previous form joined on
-    # bucketed["tbl"] == probes["tbl"] over a self-derived DataFrame
-    # and leaned on plan-id ambiguous-self-join resolution (fragile
-    # across resolver changes — r11 ADVICE).
-    probes = (
-        bucketed.where(F.col("vec_id") == BINARY_Q_ID)
-        .select(
-            F.col("tbl").alias("p_tbl"),
-            F.explode(
-                F.array(
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(f))
-                        for f in ANN_PROBE_FLIPS
-                    ]
-                )
-            ).alias("probe"),
-        )
+def _hyperplane_candidates(
+    buckets: DataFrame, q_buckets: DataFrame, q_id: int
+) -> DataFrame:
+    """(vec_id): the distinct ``buckets`` vectors other than ``q_id``
+    that share a table with one of the query's ``q_buckets`` and sit
+    in its ANN_PROBE_FLIPS neighborhood there (multiprobe)."""
+    # the probe side renames tbl -> p_tbl so the join carries no
+    # duplicated column name: joining buckets["tbl"] == probes["tbl"]
+    # over a self-derived frame leans on ambiguous-self-join resolution
+    probes = q_buckets.select(
+        F.col("tbl").alias("p_tbl"),
+        F.explode(
+            F.array(
+                *[
+                    F.col("bucket").bitwiseXOR(F.lit(f))
+                    for f in ANN_PROBE_FLIPS
+                ]
+            )
+        ).alias("probe"),
     )
-    cand = (
-        bucketed.where(F.col("vec_id") != BINARY_Q_ID)
+    return (
+        buckets.where(F.col("vec_id") != q_id)
         .join(
             F.broadcast(probes),
             (F.col("bucket") == F.col("probe"))
@@ -2447,25 +2454,24 @@ def q320_portable_hyperplane_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
         .dropDuplicates(["vec_id"])
     )
+
+
+def q320_portable_hyperplane_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    # localCheckpoint: the bucket projection (2 tables x 8 plane dots
+    # over the int8 codes) feeds BOTH the probe side and
+    # the candidate side — materialized once instead of twice (the
+    # q346 r12 lesson applied here; output unchanged, lineage only)
+    bucketed = _hyperplane_buckets(emb).localCheckpoint()
+    cand = _hyperplane_candidates(
+        bucketed,
+        bucketed.where(F.col("vec_id") == BINARY_Q_ID),
+        BINARY_Q_ID,
+    )
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    scored = (
-        cand.join(emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return _cosine_topk(cand.join(emb, "vec_id"), qv)
 
 
 def _duck_bucket_expr(mat: list[list[int]]) -> str:
@@ -2542,23 +2548,12 @@ SELECT vec_id, cos_sim, rn FROM ann WHERE rn <= {K} ORDER BY rn
 # ---------------------------------------------------------------------------
 def q321_hyperplane_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ann = q320_portable_hyperplane_ann(spark, sf_dir).select("vec_id")
+    ann = q320_portable_hyperplane_ann(spark, sf_dir)
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    w = Window.orderBy(F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).desc(), F.col("vec_id"))
-    exact = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
-    return ann.join(exact, "vec_id").agg(
-        F.lit(K).cast("bigint").alias("k"),
-        F.count(F.lit(1)).cast("bigint").alias("n_common"),
-        (F.count(F.lit(1)) / F.lit(float(K))).alias("recall"),
-    )
+    exact = _cosine_topk(emb.where(F.col("vec_id") != BINARY_Q_ID), qv)
+    return _recall_at_k(ann, exact)
 
 
 Q321_SQL = f"""
@@ -2738,22 +2733,7 @@ def _ivf_ann(emb: DataFrame, cents: DataFrame) -> DataFrame:
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    scored = (
-        cand.join(emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    wr = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(wr).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return _cosine_topk(cand.join(emb, "vec_id"), qv)
 
 
 def q325_portable_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2827,26 +2807,12 @@ SELECT vec_id, cos_sim, rn FROM ann WHERE rn <= {K} ORDER BY rn
 # ---------------------------------------------------------------------------
 def q326_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ann = q325_portable_ivf_ann(spark, sf_dir).select("vec_id")
+    ann = q325_portable_ivf_ann(spark, sf_dir)
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    w = Window.orderBy(
-        F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).desc(),
-        F.col("vec_id"),
-    )
-    exact = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
-    return ann.join(exact, "vec_id").agg(
-        F.lit(K).cast("bigint").alias("k"),
-        F.count(F.lit(1)).cast("bigint").alias("n_common"),
-        (F.count(F.lit(1)) / F.lit(float(K))).alias("recall"),
-    )
+    exact = _cosine_topk(emb.where(F.col("vec_id") != BINARY_Q_ID), qv)
+    return _recall_at_k(ann, exact)
 
 
 Q326_SQL = f"""
@@ -3494,9 +3460,14 @@ def _nng_topr(scored: DataFrame) -> DataFrame:
     rule is preserved exactly — and slice keeps the NNG_R best.
     Map-side partial aggregation replaces the partition sort; the
     per-group sort touches <= ~NNG_R*(NNG_R+2) structs. collect_set
-    also makes the (u, v)-dedup contract explicit (identical pairs
-    collapse; callers pre-dedup so this is belt-and-braces, not a
-    semantics change). Edge list verified bit-identical vs the window
+    collapses identical (u, v) pairs. Only _nng_graph's init can
+    send them: when max(vec_id)+1 divides (j1-j2)*NNG_STRIDE, two
+    offsets j1, j2 land on the same v. Init emits at most NNG_R
+    candidates per u, so a duplicate can never push a distinct
+    candidate out of the top NNG_R — the DuckDB oracle's row_number
+    keeps the duplicate rows in g0 and its round-1 UNION drops them,
+    yielding the same graph. Refine rounds dedup their candidates
+    before scoring. Edge list verified bit-identical vs the window
     form at sf0.001/0.01/0.1 + the synthetic decade; test-locked in
     test_round16_ops."""
     top = scored.groupBy("u").agg(
@@ -3635,22 +3606,7 @@ def _graph_ann_topk(emb: DataFrame, visited: DataFrame) -> DataFrame:
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    scored = (
-        visited.join(emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return _cosine_topk(visited.join(emb, "vec_id"), qv)
 
 
 def q347_portable_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3790,7 +3746,7 @@ def q348_graph_ann_recall_eval(
     # feeds both the top-k re-rank and the scan-fraction count (the
     # previous form ran the heaviest stage twice — r12 ADVICE)
     visited = _nng_visited(spark, sf_dir).localCheckpoint()
-    ann = _graph_ann_topk(emb, visited).select("vec_id")
+    ann = _graph_ann_topk(emb, visited)
     n_visited = visited.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_visited")
     )
@@ -3800,24 +3756,9 @@ def q348_graph_ann_recall_eval(
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    w = Window.orderBy(
-        F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).desc(),
-        F.col("vec_id"),
-    )
-    exact = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
+    exact = _cosine_topk(emb.where(F.col("vec_id") != BINARY_Q_ID), qv)
     return (
-        ann.join(exact, "vec_id")
-        .agg(
-            F.lit(K).cast("bigint").alias("k"),
-            F.count(F.lit(1)).cast("bigint").alias("n_common"),
-            (F.count(F.lit(1)) / F.lit(float(K))).alias("recall"),
-        )
+        _recall_at_k(ann, exact)
         .crossJoin(F.broadcast(n_visited))
         .crossJoin(F.broadcast(n_corpus))
         .select(
@@ -4370,29 +4311,10 @@ def q360_ann_ensemble_recall(
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # hyperplane candidates (q320's generator)
     bucketed = _hyperplane_buckets(emb)
-    probes = (
-        bucketed.where(F.col("vec_id") == BINARY_Q_ID)
-        .select(
-            F.col("tbl").alias("p_tbl"),
-            F.explode(
-                F.array(
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(f))
-                        for f in ANN_PROBE_FLIPS
-                    ]
-                )
-            ).alias("probe"),
-        )
-    )
-    cand_h = (
-        bucketed.where(F.col("vec_id") != BINARY_Q_ID)
-        .join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("tbl") == F.col("p_tbl")),
-        )
-        .select("vec_id")
-        .dropDuplicates(["vec_id"])
+    cand_h = _hyperplane_candidates(
+        bucketed,
+        bucketed.where(F.col("vec_id") == BINARY_Q_ID),
+        BINARY_Q_ID,
     )
     # IVF candidates (q325's generator)
     cand_i = _ivf_candidates(
@@ -4405,48 +4327,14 @@ def q360_ann_ensemble_recall(
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    scored = (
-        union.join(emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    wr = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    topk = (
-        scored.withColumn("rn", F.row_number().over(wr))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
-    wx = Window.orderBy(
-        F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).desc(),
-        F.col("vec_id"),
-    )
-    exact = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .withColumn("rn", F.row_number().over(wx))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
-    common = topk.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_common")
-    )
+    topk = _cosine_topk(union.join(emb, "vec_id"), qv)
+    exact = _cosine_topk(emb.where(F.col("vec_id") != BINARY_Q_ID), qv)
     return (
-        common.crossJoin(F.broadcast(n_h))
+        _recall_at_k(topk, exact)
+        .crossJoin(F.broadcast(n_h))
         .crossJoin(F.broadcast(n_i))
         .crossJoin(F.broadcast(n_u))
-        .select(
-            F.lit(K).cast("bigint").alias("k"),
-            "n_hyperplane",
-            "n_ivf",
-            "n_union",
-            "n_common",
-            (F.col("n_common") / F.lit(float(K))).alias("recall"),
-        )
+        .select("k", "n_hyperplane", "n_ivf", "n_union", "n_common", "recall")
     )
 
 
@@ -4656,6 +4544,26 @@ def _pq_qtable(codes: DataFrame) -> DataFrame:
     return codes.mapInPandas(table, "qt array<array<bigint>>")
 
 
+def _adc_rank(pq: DataFrame, qt: DataFrame) -> DataFrame:
+    """(vec_id, adc, srn): every PQ-coded row of ``pq`` (vec_id, pqc)
+    ADC-scored against the one-row query table ``qt`` — PPQ_M
+    integer table lookups summed — and ranked by (adc ASC, vec_id).
+    Callers keep ``srn <= shortlist``."""
+    adc_col = None
+    for m in range(PPQ_M):
+        term = F.element_at(
+            F.element_at("qt", m + 1),
+            (F.element_at("pqc", m + 1) + F.lit(1)).cast("int"),
+        )
+        adc_col = term if adc_col is None else adc_col + term
+    ws = Window.orderBy(F.col("adc").asc(), "vec_id")
+    return (
+        pq.crossJoin(F.broadcast(qt))
+        .select("vec_id", adc_col.cast("bigint").alias("adc"))
+        .withColumn("srn", F.row_number().over(ws))
+    )
+
+
 def q362_portable_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return _ivfpq_ann(emb, _pinned_pivots(spark))
@@ -4674,19 +4582,8 @@ def _ivfpq_ann(emb: DataFrame, pivots: DataFrame) -> DataFrame:
     # one-row query table, shortlist by integer distance
     pq = _pq_encode(codes.join(cand, "vec_id"))
     qt = _pq_qtable(codes.where(F.col("vec_id") == BINARY_Q_ID))
-    adc_col = None
-    for m in range(PPQ_M):
-        term = F.element_at(
-            F.element_at("qt", m + 1),
-            (F.element_at("pqc", m + 1) + F.lit(1)).cast("int"),
-        )
-        adc_col = term if adc_col is None else adc_col + term
-    scored = pq.crossJoin(F.broadcast(qt)).select(
-        "vec_id", adc_col.cast("bigint").alias("adc")
-    )
-    ws = Window.orderBy(F.col("adc").asc(), "vec_id")
     shortlist = (
-        scored.withColumn("srn", F.row_number().over(ws))
+        _adc_rank(pq, qt)
         .where(F.col("srn") <= PPQ_SHORTLIST)
         .select("vec_id")
     )
@@ -4694,22 +4591,7 @@ def _ivfpq_ann(emb: DataFrame, pivots: DataFrame) -> DataFrame:
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    exact = (
-        shortlist.join(emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    wr = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(wr).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return _cosine_topk(shortlist.join(emb, "vec_id"), qv)
 
 
 def _pq_duck_ctes() -> str:
@@ -4802,7 +4684,7 @@ SELECT vec_id, cos_sim, rn FROM ann WHERE rn <= {K} ORDER BY rn
 # ---------------------------------------------------------------------------
 def q363_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ann = q362_portable_ivfpq_ann(spark, sf_dir).select("vec_id")
+    ann = q362_portable_ivfpq_ann(spark, sf_dir)
     n_cand = _ivf_candidates(
         _int8_codes(emb).select("vec_id", "code"), _pinned_pivots(spark)
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
@@ -4812,24 +4694,9 @@ def q363_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    we = Window.orderBy(
-        F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).desc(),
-        F.col("vec_id"),
-    )
-    exact = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .withColumn("rn", F.row_number().over(we))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
+    exact = _cosine_topk(emb.where(F.col("vec_id") != BINARY_Q_ID), qv)
     return (
-        ann.join(exact, "vec_id")
-        .agg(
-            F.lit(K).cast("bigint").alias("k"),
-            F.count(F.lit(1)).cast("bigint").alias("n_common"),
-            (F.count(F.lit(1)) / F.lit(float(K))).alias("recall"),
-        )
+        _recall_at_k(ann, exact)
         .crossJoin(F.broadcast(n_cand))
         .crossJoin(F.broadcast(n_corpus))
         .select(
@@ -4898,20 +4765,10 @@ def q364_pq_shortlist_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _ivf_candidates(codes, _pinned_pivots(spark))
     pq = _pq_encode(codes.join(cand, "vec_id"))
     qt = _pq_qtable(codes.where(F.col("vec_id") == BINARY_Q_ID))
-    adc_col = None
-    for m in range(PPQ_M):
-        term = F.element_at(
-            F.element_at("qt", m + 1),
-            (F.element_at("pqc", m + 1) + F.lit(1)).cast("int"),
-        )
-        adc_col = term if adc_col is None else adc_col + term
-    ws = Window.orderBy(F.col("adc").asc(), "vec_id")
     # one ADC pass, ranked once; only rows inside the largest sweep
     # shortlist carry float re-rank cost
     ranked = (
-        pq.crossJoin(F.broadcast(qt))
-        .select("vec_id", adc_col.cast("bigint").alias("adc"))
-        .withColumn("srn", F.row_number().over(ws))
+        _adc_rank(pq, qt)
         .where(F.col("srn") <= max(PQ_SHORTLIST_SWEEP) * K)
         .localCheckpoint()
     )
@@ -4925,17 +4782,9 @@ def q364_pq_shortlist_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cos_sim"
         ),
     )
-    we = Window.orderBy(
-        F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).desc(),
-        F.col("vec_id"),
-    )
-    exact = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .withColumn("rn", F.row_number().over(we))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
+    exact = _cosine_topk(
+        emb.where(F.col("vec_id") != BINARY_Q_ID), qv
+    ).select("vec_id")
     sweep = spark.createDataFrame(
         [(m * K,) for m in PQ_SHORTLIST_SWEEP], "shortlist bigint"
     )
@@ -5267,26 +5116,12 @@ def q370_trained_ivf_recall_eval(
     the driver-graded row for the trained-pivot family (q326's pattern
     for q369)."""
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ann = q369_trained_ivf_ann(spark, sf_dir).select("vec_id")
+    ann = q369_trained_ivf_ann(spark, sf_dir)
     qv = emb.where(F.col("vec_id") == BINARY_Q_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    w = Window.orderBy(
-        F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).desc(),
-        F.col("vec_id"),
-    )
-    exact = (
-        emb.where(F.col("vec_id") != BINARY_Q_ID)
-        .crossJoin(F.broadcast(qv))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= K)
-        .select("vec_id")
-    )
-    return ann.join(exact, "vec_id").agg(
-        F.lit(K).cast("bigint").alias("k"),
-        F.count(F.lit(1)).cast("bigint").alias("n_common"),
-        (F.count(F.lit(1)) / F.lit(float(K))).alias("recall"),
-    )
+    exact = _cosine_topk(emb.where(F.col("vec_id") != BINARY_Q_ID), qv)
+    return _recall_at_k(ann, exact)
 
 
 # the one DuckDB int-L2 distance literal (codes c vs pivot table t) —

@@ -28,6 +28,36 @@ from ..operators.chunker import chunk_udf
 from ..sources.embedding_stage import embed_text
 from ..sources.loaders import parse_files
 
+_VECTORS_STREAM_SCHEMA = "vec_id bigint, embedding array<float>"
+_EVENTS_STREAM_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint,"
+    " event_type string, value double, props string"
+)
+
+
+def _parquet_stream(
+    spark: SparkSession,
+    schema: str,
+    src_dir: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(src_dir)
+
+
+def _drain(stream: DataFrame, checkpoint_dir: str, batch_fn) -> None:
+    """Run ``batch_fn(batch)`` over every micro-batch available now,
+    then return (availableNow: the stream stops once drained)."""
+    (
+        stream.writeStream.foreachBatch(lambda batch, _id: batch_fn(batch))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
 
 def _ingest_batch(
     batch: DataFrame,
@@ -86,32 +116,21 @@ def run_ingest_stream(
     size: int = 1000,
     overlap: int = 200,
 ) -> None:
-    from pyspark.sql import types as T
-
-    binary_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
     files = (
         spark.readStream.format("binaryFile")
-        .schema(binary_schema)
+        .schema(
+            "path string, modificationTime timestamp, length bigint,"
+            " content binary"
+        )
         .load(uploads_dir)
         .select("path", "content")
     )
-    (
-        files.writeStream.foreachBatch(
-            lambda batch, _id: _ingest_batch(
-                batch, store_path, user_email, size, overlap
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        files,
+        checkpoint_dir,
+        lambda batch: _ingest_batch(
+            batch, store_path, user_email, size, overlap
+        ),
     )
 
 
@@ -177,27 +196,10 @@ def run_upsert_stream(
     """Maintain a keep-latest keyed store from an event stream — the
     'current state per key' materialization (CDC apply / device
     shadow / feature-store online view)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    ev = spark.readStream.schema(schema).parquet(src_dir)
-    (
-        ev.writeStream.foreachBatch(
-            lambda batch, _id: _upsert_batch(batch, store_path, key, ts_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        _parquet_stream(spark, _EVENTS_STREAM_SCHEMA, src_dir),
+        checkpoint_dir,
+        lambda batch: _upsert_batch(batch, store_path, key, ts_col),
     )
 
 
@@ -421,26 +423,13 @@ def run_neardup_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous incremental near-dup over a document file stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
+    docs = _parquet_stream(
+        spark, "doc_id bigint, text string", src_dir, max_files_per_trigger
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(src_dir)
-    (
-        docs.writeStream.foreachBatch(
-            lambda batch, _id: _neardup_batch(batch, index_path, results_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        docs,
+        checkpoint_dir,
+        lambda batch: _neardup_batch(batch, index_path, results_path),
     )
 
 
@@ -519,26 +508,13 @@ def run_vector_index_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous ANN-index maintenance over a vector file stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
+    vecs = _parquet_stream(
+        spark, _VECTORS_STREAM_SCHEMA, src_dir, max_files_per_trigger
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    vecs = reader.parquet(src_dir)
-    (
-        vecs.writeStream.foreachBatch(
-            lambda batch, _id: _vector_index_batch(batch, index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        vecs,
+        checkpoint_dir,
+        lambda batch: _vector_index_batch(batch, index_path),
     )
 
 
@@ -548,16 +524,15 @@ def query_vector_index(
     """q362's probe pipeline against the PERSISTED index: probe the
     IVF_NPROBE nearest pinned cells, ADC-score the cells' PQ codes
     against the broadcast query table, exact-re-rank the shortlist.
-    Floats are fetched from the vector store only for the shortlist;
-    the corpus is never re-encoded."""
-    from pyspark.sql import Window
-
-    from ..functions import vectors as V
+    Shares q362's kernels (_probe_rank, _adc_rank, _cosine_topk), so
+    only the inputs differ from the batch op. Floats are fetched from
+    the vector store only for the shortlist; the corpus is never
+    re-encoded."""
     from ..operators.vector import (
         IVF_NPROBE,
-        K,
-        PPQ_M,
         PPQ_SHORTLIST,
+        _adc_rank,
+        _cosine_topk,
         _int8_codes,
         _pinned_pivots,
         _pq_qtable,
@@ -573,41 +548,16 @@ def query_vector_index(
         .where(F.col("pr") <= IVF_NPROBE)
         .select("cell")
     )
-    qt = _pq_qtable(qc)
-    adc_col = None
-    for m in range(PPQ_M):
-        term = F.element_at(
-            F.element_at("qt", m + 1),
-            (F.element_at("pqc", m + 1) + F.lit(1)).cast("int"),
-        )
-        adc_col = term if adc_col is None else adc_col + term
-    ws = Window.orderBy(F.col("adc").asc(), "vec_id")
+    probed_codes = idx.where(F.col("vec_id") != q_id).join(
+        F.broadcast(probed), "cell"
+    )
     shortlist = (
-        idx.where(F.col("vec_id") != q_id)
-        .join(F.broadcast(probed), "cell")
-        .crossJoin(F.broadcast(qt))
-        .select("vec_id", adc_col.cast("bigint").alias("adc"))
-        .withColumn("srn", F.row_number().over(ws))
+        _adc_rank(probed_codes, _pq_qtable(qc))
         .where(F.col("srn") <= PPQ_SHORTLIST)
         .select("vec_id")
     )
     qv = q_emb.select(F.col("embedding").alias("q_emb"))
-    exact = (
-        shortlist.join(store_emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    wr = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(wr).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return _cosine_topk(shortlist.join(store_emb, "vec_id"), qv)
 
 
 # ---------------------------------------------------------------------------
@@ -673,26 +623,13 @@ def run_hyperplane_index_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous hyperplane-index maintenance over a vector stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
+    vecs = _parquet_stream(
+        spark, _VECTORS_STREAM_SCHEMA, src_dir, max_files_per_trigger
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    vecs = reader.parquet(src_dir)
-    (
-        vecs.writeStream.foreachBatch(
-            lambda batch, _id: _hyperplane_index_batch(batch, index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        vecs,
+        checkpoint_dir,
+        lambda batch: _hyperplane_index_batch(batch, index_path),
     )
 
 
@@ -703,57 +640,20 @@ def query_hyperplane_index(
     query vector's own buckets expand to the pinned flip neighborhood,
     candidates come from a broadcast probe join against the persisted
     buckets, and only the candidate set fetches floats for the exact
-    cosine re-rank."""
-    from pyspark.sql import Window
-
-    from ..functions import vectors as V
+    cosine re-rank. Shares q320's kernels (_hyperplane_candidates,
+    _cosine_topk), so only the inputs differ from the batch op."""
     from ..operators.vector import (
-        ANN_PROBE_FLIPS,
-        K,
+        _cosine_topk,
         _hyperplane_buckets,
+        _hyperplane_candidates,
     )
 
     buckets_path, emb_path = _hyperplane_index_paths(index_path)
     idx = spark.read.parquet(buckets_path)
     store_emb = spark.read.parquet(emb_path).dropDuplicates(["vec_id"])
-    probes = _hyperplane_buckets(q_emb).select(
-        F.col("tbl").alias("p_tbl"),
-        F.explode(
-            F.array(
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(f))
-                    for f in ANN_PROBE_FLIPS
-                ]
-            )
-        ).alias("probe"),
-    )
-    cand = (
-        idx.where(F.col("vec_id") != q_id)
-        .join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("tbl") == F.col("p_tbl")),
-        )
-        .select("vec_id")
-        .dropDuplicates(["vec_id"])
-    )
+    cand = _hyperplane_candidates(idx, _hyperplane_buckets(q_emb), q_id)
     qv = q_emb.select(F.col("embedding").alias("q_emb"))
-    scored = (
-        cand.join(store_emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return _cosine_topk(cand.join(store_emb, "vec_id"), qv)
 
 
 # ---------------------------------------------------------------------------
@@ -933,26 +833,13 @@ def run_graph_index_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous k-NN-graph maintenance over a vector file stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
+    vecs = _parquet_stream(
+        spark, _VECTORS_STREAM_SCHEMA, src_dir, max_files_per_trigger
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    vecs = reader.parquet(src_dir)
-    (
-        vecs.writeStream.foreachBatch(
-            lambda batch, _id: _graph_index_batch(batch, index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        vecs,
+        checkpoint_dir,
+        lambda batch: _graph_index_batch(batch, index_path),
     )
 
 
@@ -1097,12 +984,6 @@ def _drift_monitor_batch(batch: DataFrame, monitor_path: str) -> None:
     ).write.mode("append").parquet(_monitor_partials_path(monitor_path))
 
 
-_EVENTS_STREAM_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint,"
-    " event_type string, value double, props string"
-)
-
-
 def _run_monitor_stream(
     spark: SparkSession,
     src_dir: str,
@@ -1111,19 +992,10 @@ def _run_monitor_stream(
     batch_fn,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    reader = spark.readStream.schema(_EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = reader.parquet(src_dir)
-    (
-        ev.writeStream.foreachBatch(
-            lambda batch, _bid: batch_fn(batch, monitor_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    ev = _parquet_stream(
+        spark, _EVENTS_STREAM_SCHEMA, src_dir, max_files_per_trigger
     )
+    _drain(ev, checkpoint_dir, lambda batch: batch_fn(batch, monitor_path))
 
 
 def run_ab_monitor_stream(

@@ -1,4 +1,4 @@
-"""Driver-cost tripwire for the IVF faces: py4j commands sent while a
+"""Driver-cost tripwire for the ANN faces: py4j commands sent while a
 face's DataFrame is CONSTRUCTED (not executed).
 
 The pinned IVF pivots are a small (cell, cent) relation fed to the
@@ -6,7 +6,9 @@ same assign/probe kernels as trained pivots. Rebuilding them as plan
 literals (16 x 64 ``F.lit`` nodes, one py4j round trip each) costs
 ~17k extra commands per face. Each cap below is about twice the count
 measured with the relation form at sf0.001, so that regression trips
-it while ordinary plan growth does not.
+it while ordinary plan growth does not. The hyperplane, binary and
+trained-IVF faces share the same exact re-rank / recall kernels and
+carry caps set by the same rule.
 """
 
 from __future__ import annotations
@@ -56,17 +58,26 @@ def _count_py4j():
 
 # measured with the relation form: q325 1,290 / q349 1,720 /
 # q360 3,479 / q362 1,955 / q363 3,526 / q364 2,678; the plan-literal
-# form measured 18,110 / 18,553 / 20,299 / 18,788 / 37,183 / 19,511
+# form measured 18,110 / 18,553 / 20,299 / 18,788 / 37,183 / 19,511.
+# With the shared kernels: q285 1,336 / q320 2,052 / q321 2,747 /
+# q326 1,985 / q370 2,223.
 REGISTRY_CAPS = {
+    "q285_binary_recall_eval": 2_700,
+    "q320_portable_hyperplane_ann": 4_100,
+    "q321_hyperplane_recall_eval": 5_500,
     "q325_portable_ivf_ann": 2_600,
+    "q326_ivf_recall_eval": 4_000,
     "q349_ivf_nprobe_curve": 3_500,
     "q360_ann_ensemble_recall": 7_000,
     "q362_portable_ivfpq_ann": 4_000,
     "q363_ivfpq_recall_eval": 7_000,
     "q364_pq_shortlist_curve": 5_400,
+    "q370_trained_ivf_recall_eval": 4_400,
 }
 # measured 1,715 (relation) / 18,408 (plan literals)
 QUERY_INDEX_CAP = 3_500
+# measured 1,998
+QUERY_HYPERPLANE_INDEX_CAP = 4_000
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY_CAPS))
@@ -85,3 +96,15 @@ def test_query_vector_index_construction_py4j_cap(spark, sf_dir, tmp_path):
     with _count_py4j() as n:
         ist.query_vector_index(spark, index, q_emb, 7)
     assert n[0] <= QUERY_INDEX_CAP, n[0]
+
+
+def test_query_hyperplane_index_construction_py4j_cap(
+    spark, sf_dir, tmp_path
+):
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    index = os.path.join(str(tmp_path), "idx")
+    ist.seed_hyperplane_index(spark, emb, index)
+    q_emb = emb.where(F.col("vec_id") == 7)
+    with _count_py4j() as n:
+        ist.query_hyperplane_index(spark, index, q_emb, 7)
+    assert n[0] <= QUERY_HYPERPLANE_INDEX_CAP, n[0]
